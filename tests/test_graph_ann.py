@@ -10,6 +10,7 @@ matches a full rebuild within recall tolerance.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -654,3 +655,105 @@ def test_filtered_search_ascending_per_query(spark, sf_dir, built):
     for _, g in pdf.groupby("query_id"):
         d = g.dist_sq.to_numpy()
         assert (np.diff(d) >= -1e-12).all()
+
+
+def _unfused_edge_rows(idx) -> pd.DataFrame:
+    """The rows the edge plan produced before the reverse rows moved
+    into the GEMM task: each probe row's M+1 nearest among its cell
+    neighborhood (the same f32 GEMM and (dist, id) top-k, recomputed
+    here from the segment files) as directed edges, then forward ∪
+    reverse with each row keyed by its src's shard."""
+    from zvdb_spark.operators.graph_ann import _cell_neighbors
+    from zvdb_spark.operators.knn import _pair_scores, _topk_by_dist_id
+
+    segs = {}
+    for pid, (pref, _, _) in idx._vec_meta.items():
+        segs[pid] = tuple(
+            np.load(f"{pref}.{part}.npy")
+            for part in ("ids", "mat32", "cells", "new")
+        )
+    nbr = _cell_neighbors(idx.centroids, idx.r_build)
+    fwd, rev = [], []
+    for c in range(len(nbr)):
+        pid = int(idx.cell_shard[c])
+        ids, mat, cells, newm = segs[pid]
+        probe = np.flatnonzero((cells == c) & newm)
+        if not len(probe):
+            continue
+        cor = [
+            (segs[pg][0][m_], segs[pg][1][m_], np.full(len(m_), pg))
+            for g in nbr[c]
+            for pg in [int(idx.cell_shard[g])]
+            for m_ in [np.flatnonzero(segs[pg][2] == g)]
+            if len(m_)
+        ]
+        cor_ids = np.concatenate([x[0] for x in cor])
+        cor_mat = np.vstack([x[1] for x in cor])
+        cor_pid = np.concatenate([x[2] for x in cor])
+        d = _pair_scores(np.ascontiguousarray(mat[probe]), cor_mat, "l2_sq")
+        kk = min(idx.m + 1, len(cor_ids))
+        part = _topk_by_dist_id(d, cor_ids, kk)
+        q = np.repeat(ids[probe], kk)
+        n = cor_ids[part.ravel()]
+        s = np.take_along_axis(d, part, axis=1).ravel()
+        keep = q != n
+        fwd.append(pd.DataFrame({"src": q[keep], "dst": n[keep],
+                                 "score": s[keep], "pid": pid}))
+        rev.append(pd.DataFrame({"src": n[keep], "dst": q[keep],
+                                 "score": s[keep],
+                                 "pid": cor_pid[part.ravel()][keep]}))
+    return pd.concat(fwd + rev, ignore_index=True)
+
+
+def _sorted_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    return (
+        pdf.astype({"src": "int64", "dst": "int64", "score": "float64",
+                    "pid": "int64"})
+        .sort_values(["src", "dst", "score", "pid"])
+        .reset_index(drop=True)
+    )
+
+
+def test_edge_plan_runs_the_gemm_once(spark, sf_dir):
+    """The pending edge plan holds ONE MapInPandas after build and
+    after append: forward and reverse rows come from the same GEMM
+    task, not from two projections of one plan that Spark would run
+    once per union branch. Its rows, the capped edges and the search
+    results equal the unfused path's (an index fed that path's rows);
+    the degree cap does not depend on input order."""
+    from zvdb_spark.operators.graph_ann import _PENDING_SCHEMA
+    from zvdb_spark.plans.audit import explain_str
+
+    emb = _emb(spark, sf_dir).localCheckpoint(eager=True)
+    base = emb.filter(F.col("vec_id") % 5 != 0)
+    delta = emb.filter(F.col("vec_id") % 5 == 0)
+    q = _queries(spark, emb)
+
+    def make():
+        return GraphIndex(m=8, ef=64, cell_target_rows=40,
+                          shard_target_rows=120)
+
+    def check(fused, unfused):
+        plan = explain_str(fused._pending_edges, "simple")
+        assert plan.count("MapInPandas") == 1, plan
+        rows = _unfused_edge_rows(fused)
+        assert _sorted_rows(fused._pending_edges.toPandas()).equals(
+            _sorted_rows(rows)
+        )
+        unfused._pending_edges = spark.createDataFrame(
+            rows.astype({"pid": "int32"}), _PENDING_SCHEMA
+        )
+        ea = _sorted_rows(fused.edges.toPandas())
+        eb = _sorted_rows(unfused.edges.toPandas())
+        assert len(ea) and ea.equals(eb)
+        cols = ["query_id", "vec_id", "dist_sq"]
+        ra = fused.search(q, k=5, n_queries=20).toPandas()
+        rb = unfused.search(q, k=5, n_queries=20).toPandas()
+        assert ra.sort_values(cols).reset_index(drop=True).equals(
+            rb.sort_values(cols).reset_index(drop=True)
+        )
+
+    fused, unfused = make().build(base), make().build(base)
+    assert len(fused._vec_meta) >= 3  # edges cross shard boundaries
+    check(fused, unfused)
+    check(fused.append(delta), unfused.append(delta))

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import PythonException
@@ -179,3 +180,85 @@ def test_graph_index_serves_cosine_via_normalization(spark, sf_dir):
         assert len(pred) == 5
         hits += len(truth & pred)
     assert hits / (len(probe_ids) * 5) >= 0.9
+
+
+def _sin_vectors(spark, n: int, dim: int, parts: int, id_col: str, vec_col: str):
+    return spark.range(0, n, numPartitions=parts).select(
+        F.col("id").alias(id_col),
+        F.transform(
+            F.sequence(F.lit(1), F.lit(dim)),
+            lambda i: F.sin(F.col("id") * 0.37 + i * 1.3),
+        ).alias(vec_col),
+    )
+
+
+def test_probe_byte_cap_stops_collecting(spark):
+    """A probe side past the byte cap is never held on the driver: the
+    capped Arrow collect keeps nothing once the cap is passed, so the
+    driver's peak memory stays near one batch, not the probe side."""
+    import tracemalloc
+
+    from zvdb_spark.operators.knn import _collect_probe_matrix
+
+    n, dim = 4000, 64  # 2 MB of f64 in 16 batches of ~128 KB
+    full = n * dim * 8
+    probes = _sin_vectors(spark, n, dim, 16, "query_id", "qemb").cache()
+    probes.count()
+
+    def peak(cap):
+        tracemalloc.start()
+        try:
+            got = _collect_probe_matrix(probes, "query_id", "qemb", cap)
+            return got, tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    got, peak_kept = peak(2 * full)
+    assert got[1].shape == (n, dim) and peak_kept >= full
+    expect = probes.toPandas()
+    assert (got[0] == expect.query_id.to_numpy()).all()
+    assert (got[1] == np.stack(expect.qemb.to_numpy())).all()
+    got, peak_capped = peak(100_000)
+    assert got is None
+    assert peak_capped < full / 2, (peak_capped, full)
+    probes.unpersist()
+
+
+def test_probe_byte_cap_falls_back_to_blocked_grid(spark, monkeypatch):
+    """Past _BCAST_PROBE_BYTES exact search takes the blocked cogroup
+    grid with the same top-k; under the cap the broadcast path still
+    runs exactly one Spark job (the collect) before returning its lazy
+    result."""
+    from zvdb_spark.operators import knn
+    from zvdb_spark.plans.audit import explain_str
+
+    n, dim, k = 4000, 64, 3
+    corpus = _sin_vectors(spark, n, dim, 16, "vec_id", "emb")
+    probes = corpus.select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("probe-cap-accept", "probe-cap-accept")
+    try:
+        bcast = knn.exact_search_blocked(
+            corpus, probes, k=k, n_corpus=n, n_probes=n
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup("probe-cap-accept")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 1
+    assert "FlatMapCoGroupsInPandas" not in explain_str(bcast, "simple")
+    monkeypatch.setattr(knn, "_BCAST_PROBE_BYTES", 100_000)
+    blocked = knn.exact_search_blocked(
+        corpus, probes, k=k, n_corpus=n, n_probes=n
+    )
+    assert "FlatMapCoGroupsInPandas" in explain_str(blocked, "simple")
+    cols = ["query_id", "rn"]
+    a = bcast.toPandas().sort_values(cols, ignore_index=True)
+    b = blocked.toPandas().sort_values(cols, ignore_index=True)
+    assert len(a) == n * k
+    assert a[["query_id", "neighbor_id", "rn"]].equals(
+        b[["query_id", "neighbor_id", "rn"]]
+    )
+    assert np.allclose(a["score"], b["score"], atol=1e-9)

@@ -1,7 +1,8 @@
 """Every registered query with an oracle must match DuckDB at sf0.001.
 
-This mirrors the driver's t2 gate (which runs at sf0.01); see
-tests/test_oracle_parity_sf01.py for the slower exact-tier run.
+The same comparison runs at sf0.01 through ``__spark_entry__.py``
+(``queries()`` against ``oracle_sql()``); no separate sf0.01 test
+exists.
 """
 
 from __future__ import annotations

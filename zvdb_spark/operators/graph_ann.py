@@ -115,9 +115,6 @@ _MIN_CELLS = 4
 _LOCAL_KMEANS_MAX_ELEMS = 50_000_000
 
 SEARCH_SCHEMA_STR = "query_id long, vec_id long, dist_sq double"
-_EDGE_SCHEMA = (
-    "query_id long, neighbor_id long, score double, q_pid int, n_pid int"
-)
 _PACK_SCHEMA = (
     "pid int, n long, dim int, prefix string,"
     " cells array<int>, seeds array<array<bigint>>"
@@ -222,25 +219,6 @@ def _canonical_capped_edges(
     )
     cap = (np.arange(len(src)) - grp_start) < two_m
     return src[cap], dst[cap], sc[cap]
-
-
-def _symmetrize(nn: DataFrame) -> DataFrame:
-    """Bidirectional edges — the connect half of the reference's
-    connect + shrinkConnections (src/hnsw.zig:119-170). NO shuffle:
-    the degree cap, dedupe and shrink all happen inside the per-shard
-    adjacency pack (``state``), which needs a groupBy(pid) shuffle
-    anyway — a separate per-src window here was one full extra
-    shuffle of the edge table for nothing. Each edge carries its
-    SRC's shard (both endpoints' shards are known at GEMM time) so
-    the pack groups without a corpus join.
-    Returns (src, dst, score, pid)."""
-    fwd = nn.select(F.col("query_id").alias("src"),
-                    F.col("neighbor_id").alias("dst"), "score",
-                    F.col("q_pid").alias("pid"))
-    rev = nn.select(F.col("neighbor_id").alias("src"),
-                    F.col("query_id").alias("dst"), "score",
-                    F.col("n_pid").alias("pid"))
-    return fwd.unionAll(rev)
 
 
 def _structure_ratio(smat: np.ndarray, centroids: np.ndarray) -> float:
@@ -574,7 +552,7 @@ class GraphIndex:
         )
         self._assign_shards(cell_weights=cell_sample_counts)
         self._pack_vectors(self.celled)
-        nn = self._edges_from_segments()
+        pending = self._edges_from_segments()
         _retire_prefixes(p for p in self._edge_meta.values() if p)
         _retire_prefixes(a for *_, a in self._adj_meta.values() if a)
         self._adj_meta = {}
@@ -582,7 +560,7 @@ class GraphIndex:
         # LAZY: the edge GEMM streams straight into state()'s pack
         # shuffle — no intermediate materialization of the N x 2(M+1)
         # edge table (GEMM + shuffle + pack pipeline as ONE job)
-        self._pending_edges = _symmetrize(nn)
+        self._pending_edges = pending
         self._pending_lazy = True
         self._dirty = None  # full adjacency pack pending
         self._state = None
@@ -809,16 +787,28 @@ class GraphIndex:
     def _edges_from_segments(
         self, cells: list[int] | None = None
     ) -> DataFrame:
-        """Directed approximate M-NN edges, cell-blocked: every probe
-        row (new mask in the segment) searches its ``m`` nearest among
-        the members of its ``r_build`` nearest cells. The work unit is
-        a CELL: a C-row driver-made work list (cell, its neighbor
-        cells, their shards) fans out to tasks that mmap the vector
-        segments — the corpus itself never shuffles; only the N x M
-        edge rows flow back. Cost ~R/C of the exact N² GEMM.
+        """Bidirectional approximate M-NN edges (src, dst, score, pid),
+        cell-blocked: every probe row (new mask in the segment)
+        searches its ``m`` nearest among the members of its
+        ``r_build`` nearest cells, and each found pair is emitted in
+        both directions — the connect half of the reference's
+        connect + shrinkConnections (src/hnsw.zig:119-170). The work
+        unit is a CELL: a C-row driver-made work list (cell, its
+        neighbor cells, their shards) fans out to tasks that mmap the
+        vector segments — the corpus itself never shuffles; only the
+        2 x N x M edge rows flow back. Cost ~R/C of the exact N² GEMM.
         ``cells`` restricts the work list (append passes only the
         cells that received new rows — GEMM cost scales with the
-        delta, not the corpus)."""
+        delta, not the corpus).
+
+        The reverse rows come from the same task as the forward ones:
+        projecting one mapInPandas plan twice and unioning the
+        projections made Spark run the GEMM once per union branch.
+        NO shuffle here: the degree cap, dedupe and shrink all happen
+        inside the per-shard adjacency pack (``state``), which needs
+        a groupBy(pid) shuffle anyway. Each row carries its SRC's
+        shard (both endpoints' shards are known at GEMM time), so the
+        pack groups without a corpus join."""
         spark = self.celled.sparkSession
         nbr = _cell_neighbors(self.centroids, self.r_build)
         cell_pid = self.cell_shard
@@ -910,26 +900,27 @@ class GraphIndex:
                     np_ = cor_pid[part.ravel()]
                     ss = np.take_along_axis(d, part, axis=1).ravel()
                     keep = qq != nb_  # drop self-edges
-                    # both endpoints' shards are known right here, so
-                    # the adjacency pack never needs a corpus join to
-                    # recover them
+                    qq, nb_, ss = qq[keep], nb_[keep], ss[keep]
+                    # forward rows then reverse rows, each keyed by its
+                    # src's shard
                     out.append(
                         (
-                            qq[keep],
-                            nb_[keep],
-                            ss[keep],
-                            np.full(keep.sum(), pid, dtype=np.int32),
-                            np_[keep],
+                            np.concatenate([qq, nb_]),
+                            np.concatenate([nb_, qq]),
+                            np.concatenate([ss, ss]),
+                            np.concatenate(
+                                [np.full(len(qq), pid, dtype=np.int32),
+                                 np_[keep]]
+                            ),
                         )
                     )
                 if out:
                     yield pd.DataFrame(
                         {
-                            "query_id": np.concatenate([o[0] for o in out]),
-                            "neighbor_id": np.concatenate([o[1] for o in out]),
+                            "src": np.concatenate([o[0] for o in out]),
+                            "dst": np.concatenate([o[1] for o in out]),
                             "score": np.concatenate([o[2] for o in out]),
-                            "q_pid": np.concatenate([o[3] for o in out]),
-                            "n_pid": np.concatenate([o[4] for o in out]),
+                            "pid": np.concatenate([o[3] for o in out]),
                         }
                     )
 
@@ -940,7 +931,7 @@ class GraphIndex:
         # with a fixed count is respected by AQE and balances cells
         # perfectly; grouping semantics aren't needed — each row is an
         # independent cell.
-        return work.repartition(ntasks).mapInPandas(_task, _EDGE_SCHEMA)
+        return work.repartition(ntasks).mapInPandas(_task, _PENDING_SCHEMA)
 
     def _celled_from_segments(self, spark=None) -> DataFrame:
         """(cell_id, vec_id, emb) read back from the packed segments —
@@ -1029,12 +1020,11 @@ class GraphIndex:
             dirty.add(int(self.cell_shard[c]))
             for g in nbr[c]:
                 dirty.add(int(self.cell_shard[g]))
-        nn = self._edges_from_segments(cells=new_cells)  # new rows probe
-        # delta-sized (|new| x 2(M+1) rows) LAZY edge plan: the GEMM
-        # runs inside state()'s pack shuffle (one job, no separate
-        # materialization). The FULL edge table is never touched here
-        # — that is what makes append delta-cost.
-        delta_edges = _symmetrize(nn)
+        # new rows probe. Delta-sized (|new| x 2(M+1) rows) LAZY edge
+        # plan: the GEMM runs inside state()'s pack shuffle (one job,
+        # no separate materialization). The FULL edge table is never
+        # touched here — that is what makes append delta-cost.
+        delta_edges = self._edges_from_segments(cells=new_cells)
         if self._pending_edges is None:
             self._pending_edges = delta_edges
         else:

@@ -238,8 +238,8 @@ _MAX_SIDE_ROWS = 65536     # per-task matrix bound (64 MB at 128-d f64)
 _CELL_CHUNK_ELEMS = 1 << 24  # distance-matrix elements (128 MB f64)
 
 # Broadcast-probe gate (round 14): a probe side at or below this many
-# ROWS (and _BCAST_PROBE_BYTES of float64 payload, checked after the
-# Arrow collect) rides an executor BROADCAST instead of being
+# ROWS (and _BCAST_PROBE_BYTES of float64 payload, checked while the
+# Arrow collect streams in) rides an executor BROADCAST instead of being
 # replicated through the exchange. At the 1M x 10k bench shape the
 # exploded probe side was 245 copies x 10k rows x ~1.1 KB ≈ 2.7 GB of
 # shuffle write+read plus one Arrow decode + np.stack of the full
@@ -252,20 +252,57 @@ _BCAST_PROBE_BYTES = 1 << 27  # 128 MB of f64 probe matrix
 
 
 def _collect_probe_matrix(probes: DataFrame, query_id: str,
-                          query_vec: str):
-    """(ids, matrix) of a SMALL probe side via one Arrow ``toPandas``
-    (guide: Arrow for driver transfers; the driver holds only the
-    gate-bounded probe batch, never corpus rows)."""
+                          query_vec: str, max_bytes: int):
+    """(ids, float64 matrix) of a SMALL probe side, or None once the
+    matrix would pass ``max_bytes``. One Arrow collect — the same
+    single job ``toPandas`` runs — read batch by batch, so past the
+    cap the Spark driver keeps nothing and never holds more than the
+    cap plus one batch; it never holds corpus rows. The rest of the
+    stream is read and dropped: Spark writes it from its scheduler
+    thread, which blocks until the batches are read, and cancelling
+    the job instead kills tasks mid Arrow conversion, which Spark
+    reports as leaked Arrow buffers."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.errors.exceptions.captured import unwrap_spark_exception
+    from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+    from pyspark.util import local_connect_and_auth
 
-    pdf = probes.select(query_id, query_vec).toPandas()
-    qids = pdf[query_id].to_numpy().astype(np.int64, copy=False)
-    if not len(qids):
-        return qids, np.empty((0, 0), dtype=np.float64)
-    qarr = np.ascontiguousarray(
-        np.stack(pdf[query_vec].to_numpy()).astype(np.float64)
-    )
-    return qids, qarr
+    port, secret, server = probes.select(
+        query_id, query_vec
+    )._jdf.collectAsArrowToPython()
+    sockfile, sock = local_connect_and_auth(port, secret)
+    sock.settimeout(None)  # the collect job may take any time
+    batches, order, nbytes = [], None, 0
+    try:
+        for item in ArrowCollectSerializer().load_stream(sockfile):
+            if not isinstance(item, pa.RecordBatch):
+                order = item  # the last item: the batches' true order
+                continue
+            nbytes += 8 * len(item.column(1).flatten())
+            if nbytes > max_bytes:
+                batches = None
+            elif batches is not None:
+                batches.append(item)
+    finally:
+        sockfile.close()
+        sock.close()
+        with unwrap_spark_exception():
+            server.getResult()
+    if batches is None:
+        return None
+    batches = [batches[i] for i in order if batches[i].num_rows]
+    if not batches:
+        return np.empty(0, dtype=np.int64), np.empty((0, 0))
+    tbl = pa.Table.from_batches(batches)
+    qids = tbl.column(0).to_numpy().astype(np.int64, copy=False)
+    vecs = tbl.column(1).combine_chunks()
+    lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+    if vecs.null_count or (lens != lens[0]).any():
+        raise ValueError(f"{query_vec}: probe vectors differ in length")
+    qarr = vecs.flatten().to_numpy().astype(np.float64)
+    return qids, qarr.reshape(len(qids), int(lens[0]))
 
 
 def _bcast_probe_map(corpus: DataFrame, fn, n_shards: int,
@@ -387,8 +424,11 @@ def exact_search_blocked(
         and rows_q <= _BCAST_PROBE_ROWS
         and n_blocks in (None, 1)
     ):
-        qids, qarr = _collect_probe_matrix(probes, query_id, query_vec)
-        if qarr.nbytes <= _BCAST_PROBE_BYTES:
+        probe_side = _collect_probe_matrix(
+            probes, query_id, query_vec, _BCAST_PROBE_BYTES
+        )
+        if probe_side is not None:
+            qids, qarr = probe_side
             spark = corpus.sparkSession
             if not len(qids):
                 return spark.createDataFrame(
@@ -535,8 +575,11 @@ def threshold_join_blocked(
         and rows_q <= _BCAST_PROBE_ROWS
         and n_blocks in (None, 1)
     ):
-        qids_b, qarr_b = _collect_probe_matrix(probes, query_id, query_vec)
-        if qarr_b.nbytes <= _BCAST_PROBE_BYTES:
+        probe_side = _collect_probe_matrix(
+            probes, query_id, query_vec, _BCAST_PROBE_BYTES
+        )
+        if probe_side is not None:
+            qids_b, qarr_b = probe_side
             spark = corpus.sparkSession
             if not len(qids_b):
                 return spark.createDataFrame([], _PAIR_SCHEMA)

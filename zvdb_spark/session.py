@@ -6,6 +6,20 @@ partition coalescing), broadcast threshold sized so the dimension
 tables (region/nation/supplier) always broadcast, Arrow enabled for
 the Pandas-UDF paths, UTC session timezone so timestamp semantics
 match the DuckDB oracle.
+
+Python workers come from the engine's own daemon
+(``spark.python.daemon.module = zvdb_spark.daemon``). PySpark calls
+``importlib.invalidate_caches()`` before every Python task, and before
+Python 3.13 that re-reads the central directory of every zip archive
+on the worker path (``pyspark.zip``, py4j, the Spark core jar). On a
+4-core host, a trivial 32-task RDD ``map`` in a warm session cost
+0.29 CPU-s of worker CPU per task that way; the daemon makes the
+re-read a no-op (see ``zvdb_spark/daemon.py``) and the same job costs
+0.027 CPU-s per task. Python 3.13 made the invalidation lazy, so
+there the daemon changes nothing. Because the JVM starts the daemon
+as ``python -m zvdb_spark.daemon``, the package's parent directory
+goes onto ``spark.executorEnv.PYTHONPATH``: workers then find the
+engine from any working directory.
 """
 
 from __future__ import annotations
@@ -15,6 +29,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# directory holding the zvdb_spark package, for the workers' PYTHONPATH
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
 
 
 def get_session(
@@ -61,6 +79,8 @@ def get_session(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        .config("spark.python.daemon.module", "zvdb_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
