@@ -107,16 +107,12 @@ def test_declared_queries_never_collect_table_data():
     assert marked == 1, f"driver-bounded marker count drifted: {marked}"
 
 
-def test_blocked_search_matches_partitioned(spark):
-    """exact_search_blocked (DataFrame probe side) returns the same
-    top-k as exact_search_partitioned (numpy probe side)."""
+def test_blocked_search_matches_crossjoin_reference(spark):
+    """exact_search_blocked on an explicit 4 x 3 cogroup grid returns
+    the same top-k as the crossJoin + window reference (knn_join)."""
     import pandas as pd
 
-    from zvdb_spark.operators.knn import shard_vectors
-    from zvdb_spark.operators.knn import (
-        exact_search_blocked,
-        exact_search_partitioned,
-    )
+    from zvdb_spark.operators.knn import exact_search_blocked, knn_join
 
     rng = np.random.default_rng(3)
     n, dim, k = 200, 8, 5
@@ -133,17 +129,16 @@ def test_blocked_search_matches_partitioned(spark):
         .toPandas()
         .sort_values(["query_id", "rn"], ignore_index=True)
     )
-    sharded = shard_vectors(df, 4)
-    part = (
-        exact_search_partitioned(sharded, mat, k=k, dtype="float64")
+    ref = (
+        knn_join(df, probes, k=k)
         .toPandas()
         .sort_values(["query_id", "rn"], ignore_index=True)
     )
     pd.testing.assert_frame_equal(
         blocked[["query_id", "neighbor_id", "rn"]],
-        part[["query_id", "neighbor_id", "rn"]],
+        ref[["query_id", "neighbor_id", "rn"]],
     )
-    assert np.allclose(blocked["score"], part["score"], atol=1e-9)
+    assert np.allclose(blocked["score"], ref["score"], atol=1e-9)
 
 
 def test_salted_join_rejects_right_full(spark):

@@ -80,6 +80,10 @@ def test_auto_grid_uses_supplied_counts_without_scanning():
     )
     assert n_blocks == 1  # small probe side: corpus crosses ONCE
     assert n_shards == 5  # ceil(5000/_MIN_CELL_ROWS)
+    # a given block count needs no probe count at all
+    assert _auto_grid(
+        None, None, None, 3, n_corpus=5000, parallelism=32
+    ) == (5, 3)
 
 
 def test_auto_grid_minimizes_replication():
@@ -108,7 +112,8 @@ def test_auto_grid_minimizes_replication():
     assert b == 1
     assert p == 256
     # explicit values are always respected verbatim
-    assert _auto_grid(None, None, 7, 3, n_corpus=10, n_probes=10) == (7, 3)
+    assert _auto_grid(None, None, 7, 3, n_corpus=10, n_probes=10,
+                      parallelism=32) == (7, 3)
 
 
 def test_unit_vector_cosine_bridge(spark, sf_dir):
@@ -261,4 +266,52 @@ def test_probe_byte_cap_falls_back_to_blocked_grid(spark, monkeypatch):
     assert a[["query_id", "neighbor_id", "rn"]].equals(
         b[["query_id", "neighbor_id", "rn"]]
     )
+    assert np.allclose(a["score"], b["score"], atol=1e-9)
+
+
+@pytest.mark.parametrize(
+    "metric,tau,upper_only",
+    [("l2_sq", 1.0, True), ("l2_sq", 1.0, False), ("cosine", 0.99, True)],
+)
+def test_probe_byte_cap_threshold_join_blocked_grid(
+    spark, monkeypatch, metric, tau, upper_only
+):
+    """Past _BCAST_PROBE_BYTES the threshold join takes the blocked
+    cogroup grid and emits the same pairs as the broadcast layout."""
+    from zvdb_spark.operators import knn
+    from zvdb_spark.plans.audit import explain_str
+
+    n, dim = 2000, 64
+    corpus = _sin_vectors(spark, n, dim, 8, "vec_id", "emb")
+    probes = corpus.select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
+    )
+    # no pair sits close enough to tau for a ~1e-15 GEMM-shape score
+    # difference between the layouts to flip it
+    local = corpus.toPandas()
+    ids = local.vec_id.to_numpy()
+    mat = np.stack(local.emb.to_numpy())
+    scores = knn._pair_scores(mat, mat, metric)
+    assert np.abs(scores - tau).min() >= 5e-8
+    keep = scores < tau if metric == "l2_sq" else scores >= tau
+    if upper_only:
+        keep &= ids[None, :] > ids[:, None]
+    assert keep.sum() > 80_000  # 89k to 225k pairs across the cases
+
+    def join():
+        return knn.threshold_join_blocked(
+            corpus, probes, tau=tau, metric=metric, upper_only=upper_only,
+            n_corpus=n, n_probes=n,
+        )
+
+    bcast = join()
+    assert "FlatMapCoGroupsInPandas" not in explain_str(bcast, "simple")
+    monkeypatch.setattr(knn, "_BCAST_PROBE_BYTES", 100_000)
+    blocked = join()
+    assert "FlatMapCoGroupsInPandas" in explain_str(blocked, "simple")
+    cols = ["query_id", "neighbor_id"]
+    a = bcast.toPandas().sort_values(cols, ignore_index=True)
+    b = blocked.toPandas().sort_values(cols, ignore_index=True)
+    assert len(a) == keep.sum()
+    assert a[cols].equals(b[cols])
     assert np.allclose(a["score"], b["score"], atol=1e-9)

@@ -62,27 +62,28 @@ def test_explicit_broadcast_zero_shuffle_joins(spark, sf_dir):
     assert a["n_sortmerge_joins"] == 0
 
 
-def test_partitioned_knn_single_shuffle(spark, sf_dir):
-    """Batched exact kNN over a pre-partitioned checkpointed corpus:
-    the ONLY Exchange in the plan is the P*k-row merge window — the
-    corpus itself never re-shuffles per search (the round-2 fix for
-    AQE coalescing the shard fan-out into a few tasks)."""
+def test_blocked_knn_broadcast_single_exchange(spark, sf_dir):
+    """Batched exact kNN with a small probe side takes the broadcast
+    layout: no cogroup grid, no sort-merge join, and the corpus crosses
+    exactly one Exchange. At the fixture's 500 rows the grid is one
+    shard, and that partition already satisfies the per-query merge
+    window, so it is the plan's only Exchange."""
     from pyspark.sql import functions as F
 
-    import numpy as np
-
     from zvdb_spark.functions.vector import as_double_array
-    from zvdb_spark.operators.knn import exact_search_partitioned, shard_vectors
+    from zvdb_spark.operators.knn import exact_search_blocked
     from zvdb_spark.sources.tables import load
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("emb")
     )
-    sharded = shard_vectors(emb, 8).localCheckpoint(eager=True)
-    q = np.zeros((4, len(emb.select("emb").head()[0])))
-    a = plan_audit(exact_search_partitioned(sharded, q, k=3, dtype="float64"))
-    assert a["n_exchanges"] == 1, a["plan"]
+    q = emb.limit(4).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
+    )
+    a = plan_audit(exact_search_blocked(emb, q, k=3, n_probes=4))
+    assert "FlatMapCoGroupsInPandas" not in a["plan"]
     assert a["n_sortmerge_joins"] == 0
+    assert a["n_exchanges"] == 1, a["plan"]
 
 
 def test_graph_search_moves_no_index_data(spark, sf_dir):

@@ -243,20 +243,6 @@ def _structure_ratio(smat: np.ndarray, centroids: np.ndarray) -> float:
     return float(d_within / max(d_between, 1e-12))
 
 
-def _kmeans_local(sample: np.ndarray, k: int, n_iter: int) -> np.ndarray:
-    """Seeded Lloyd's on a driver-local sample (same algorithm as
-    operators/kmeans.kmeans_fit: init = first k rows in id order,
-    fixed iterations, empty cells keep their centroid). The sample is
-    bounded at 40 rows/cell, so this is quantizer metadata work, not
-    table data. Delegates to the shared thread-chunked kernel
-    (operators/kmeans.lloyd_local) — the per-cluster-mask loop this
-    used before was ~150 s of single-BLAS-thread driver time at the
-    1M-row build shape (k=2500, 100k sample)."""
-    from zvdb_spark.operators.kmeans import lloyd_local
-
-    return lloyd_local(sample, k, n_iter)
-
-
 def _group_seeds_by_pid(
     near: np.ndarray, cell_shard: np.ndarray, cell_seeds: np.ndarray
 ) -> list[list[dict]]:
@@ -508,7 +494,11 @@ class GraphIndex:
     # -- build (R1-R5, bulk) ----------------------------------------
     def build(self, emb: DataFrame, n_rows: int | None = None) -> "GraphIndex":
         """emb: (vec_id, emb)."""
-        from zvdb_spark.operators.kmeans import assign_cells, kmeans_fit
+        from zvdb_spark.operators.kmeans import (
+            assign_cells,
+            kmeans_fit,
+            lloyd_local,
+        )
 
         if n_rows is None:
             n_rows = emb.count()
@@ -520,7 +510,9 @@ class GraphIndex:
         if 40.0 * c_cells * dim_guess <= _LOCAL_KMEANS_MAX_ELEMS:
             spdf = sample.select("vec_id", "emb").orderBy("vec_id").toPandas()
             smat = np.stack(spdf["emb"].to_numpy()).astype(np.float64)
-            self.centroids = _kmeans_local(smat, c_cells, n_iter=4)
+            # seeded Lloyd's on the id-ordered sample (40 rows/cell:
+            # quantizer metadata, not table data)
+            self.centroids = lloyd_local(smat, c_cells, n_iter=4)
             self.structure_ratio = _structure_ratio(smat, self.centroids)
         else:
             self.centroids = kmeans_fit(

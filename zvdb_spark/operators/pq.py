@@ -34,8 +34,8 @@ Distributed shape (all stages cluster-side):
   it, so re-run the interleaved A/B before inheriting the GEMM form
   into a different dim/m split. Per-partition top-k, then a
   global window merge carrying only P x k rows per query — identical
-  merge contract to operators/knn.exact_search. Emitted distances are
-  float32 casts of the f64-exact ADC quantity (the LUT form emitted
+  merge contract to operators/knn.exact_search_blocked. Emitted
+  distances are float32 casts of the f64-exact ADC quantity (the LUT form emitted
   f32 partial sums of the same quantity — agreement to ~3e-7
   relative; candidate selection can differ only on sub-1e-6 near-ties
   at the cap boundary, confirmed by exact re-rank downstream).

@@ -498,10 +498,7 @@ def exact_search_segments(
     # Arrow batch framing, first-touch mmap page-in — dominate extra
     # waves. At 100k x 128-d, nq=10k, 32 cores: 1 wave 2.10 s best /
     # 2.24 s median, 2 waves 2.69 s, 4 waves 3.91 s, 8 waves 3.97 s.
-    # SPARK_GRAFT_EXACT_WAVES raises it for clusters with genuinely
-    # heterogeneous executors.
-    waves = int(os.environ.get("SPARK_GRAFT_EXACT_WAVES", "1"))
-    n_tasks = max(1, min(waves * par, -(-n_queries * len(groups) // 64)))
+    n_tasks = max(1, min(par, -(-n_queries * len(groups) // 64)))
 
     from zvdb_spark.operators.knn import _topk_by_dist_id
 

@@ -38,7 +38,7 @@ Distributed shape (all stages cluster-side):
   ndarray) and GEMMs against the float queries — queries stay
   full-precision, so the only error is the corpus-side rounding.
   Per-partition top-k then a global window merge: identical contract
-  to pq.pq_search / knn.exact_search.
+  to pq.pq_search / knn.exact_search_blocked.
 
 Determinism: min/max is order-independent and rounding is IEEE, so
 the CODES are bit-identical on any partitioning or cluster size.

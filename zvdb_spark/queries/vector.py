@@ -18,11 +18,12 @@ oracle-checkable Spark plans:
 
 Scale notes: the exact k-NN path is a scan + TakeOrderedAndProject
 (per-partition heaps, then a k-row merge on the driver) — O(N) work,
-O(k) result, no shuffle of the data itself. The batch variant is a
-crossJoin that is quadratic by definition (the declared contract is
-exact); the sub-quadratic path for big N is the LSH/blocking family in
-``zvdb_spark/queries/dedup.py`` and the ANN operators in
-``zvdb_spark/operators/ann.py``.
+O(k) result, no shuffle of the data itself. The batch variant and the
+similarity joins are quadratic by definition (the declared contract is
+exact) and run the blocked GEMM fan-out in
+``zvdb_spark/operators/knn.py``; the sub-quadratic path for big N is
+the LSH/blocking family in ``zvdb_spark/queries/dedup.py`` and the ANN
+operators in ``zvdb_spark/operators/graph_ann.py``.
 """
 
 from __future__ import annotations
@@ -116,16 +117,17 @@ def q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched multi-query k-NN: every vector's top-k neighbors
     (self included, dist 0 — mirrors reference self-match semantics).
 
-    Implementation: block-matrix exact search with BOTH sides as
-    DataFrames (operators/knn.py:exact_search_blocked) — probes are
-    hash-blocked, the corpus hash-sharded, each (block x shard) cell
-    computes one GEMM top-k inside a cogrouped applyInPandas task, and
-    the global merge carries only k candidates per cell per query.
-    This is the columnar/SIMD execution the reference lists as future
-    work (benchmarks/benchmark.md:37-47), with no driver-side collect
-    of table data anywhere: task memory stays bounded at any corpus
-    size (float64 GEMM; the 1e-15 accumulation-order difference vs the
-    HOF kernel vanishes under round(4)).
+    Implementation: exact search with BOTH sides as DataFrames
+    (operators/knn.py:exact_search_blocked) — the corpus is
+    hash-sharded, each task computes one GEMM top-k against the probe
+    matrix (broadcast when the probe side is small, otherwise a
+    cogrouped probe-block x corpus-shard grid), and the global merge
+    carries only k candidates per task per query. This is the
+    columnar/SIMD execution the reference lists as future work
+    (benchmarks/benchmark.md:37-47): the driver never holds corpus
+    rows and task memory stays bounded at any corpus size (float64
+    GEMM; the 1e-15 accumulation-order difference vs the HOF kernel
+    vanishes under round(4)).
     """
     from zvdb_spark.operators.knn import exact_search_blocked
     from zvdb_spark.sources.tables import table_row_count
@@ -205,11 +207,12 @@ def q_sim_join_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the all-pairs generalization of the reference's single
     probe. Block-matrix threshold join with both sides as DataFrames
-    (operators/knn.py:threshold_join_blocked): each (probe-block x
-    corpus-shard) cell evaluates one GEMM and emits only pairs passing
-    the threshold — pairs are emitted, never the cross product, and no
-    table data touches the driver. At 100 TB additionally pre-prune
-    candidates with the LSH band pattern (q_dedup_minhash).
+    (operators/knn.py:threshold_join_blocked): each task evaluates one
+    GEMM of the probe matrix against its corpus shard and emits only
+    pairs passing the threshold — pairs are emitted, never the cross
+    product, and the driver never holds corpus rows (the probe side
+    only when it is small enough to broadcast). At 100 TB additionally
+    pre-prune candidates with the LSH band pattern (q_dedup_minhash).
     """
     from zvdb_spark.operators.knn import threshold_join_blocked
     from zvdb_spark.sources.tables import table_row_count
