@@ -2437,6 +2437,78 @@ def test_schema_evolution_widen_read_compact(spark, sf_dir, tmp_path):
     assert "Join" not in plan, plan
 
 
+def test_committed_reads_take_their_schema_from_the_log(
+    spark, sf_dir, tmp_path
+):
+    """Committed reads plan from the log's recorded schema: building
+    the frame launches no Spark job (no parquet footer inference), and
+    on a widened layout with a delete each read equals an inferred
+    mergeSchema read of the same committed files — same dtypes, same
+    column order, same rows."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from zvdb_spark.queries.export import (
+        append_shards_tx,
+        committed_files,
+        delete_docs_tx,
+        lookup_docs,
+        read_committed,
+        read_committed_pruned,
+    )
+
+    docs, out = _tx_setup(spark, sf_dir, tmp_path)
+    widen = _with_quality(docs, F.col("doc_id") % 2 == 1).limit(10)
+    assert append_shards_tx(spark, out, widen, 1) is True
+    dead = sorted(
+        r.doc_id
+        for r in docs.filter(F.col("doc_id") % 2 == 0).limit(3).collect()
+    )
+    assert delete_docs_tx(
+        spark, out, spark.createDataFrame([(i,) for i in dead], "doc_id long"), 2
+    ) is True
+    data = [f for f in committed_files(out) if f.startswith("shard=")]
+    inferred = (
+        spark.read.option("basePath", out)
+        .option("mergeSchema", "true")
+        .parquet(*[os.path.join(out, f) for f in data])
+        .filter(~F.col("doc_id").isin(dead))
+    )
+    widened = sorted(r.doc_id for r in widen.select("doc_id").collect())
+    ids = dead[:1] + widened[:2] + [dead[-1] + 2]
+    lo, hi = widened[0], widened[-1]
+    cases = {
+        "read_committed": (
+            lambda: read_committed(spark, out),
+            inferred,
+        ),
+        "lookup_docs": (
+            lambda: lookup_docs(spark, out, ids),
+            inferred.filter(F.col("doc_id").isin(ids)),
+        ),
+        "read_committed_pruned": (
+            lambda: read_committed_pruned(spark, out, lo, hi),
+            inferred.filter(F.col("doc_id").between(lo, hi)),
+        ),
+    }
+    sc = spark.sparkContext
+    for name, (build, want) in cases.items():
+        group = f"log-schema-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            got = build()
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(jobs) == [], name
+        assert got.dtypes == want.dtypes, name
+        rows = sorted(got.collect(), key=lambda r: r.doc_id)
+        assert rows == sorted(want.collect(), key=lambda r: r.doc_id), name
+        assert rows, name
+
+
 def test_schema_evolution_rejects_drop_retype_reserved(
     spark, sf_dir, tmp_path
 ):

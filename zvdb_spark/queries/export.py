@@ -277,16 +277,17 @@ def _append_committed(
     for _ in range(max_attempts):
         n = _check_layout_n(out_dir, n_shards, caller)
         commits = _read_commits(out_dir) or []
-        extras = _check_widen_only(
-            new_docs, commits, set(_live_names_from(commits)), caller
-        )
+        live = set(_live_names_from(commits))
+        extras = _check_widen_only(new_docs, commits, live, caller)
         # rank against the DATA view (soft-deleted rows included) plus
         # the maintenance high-water mark: a deleted row's pos must
         # never be re-minted, so the max is over everything that EVER
         # held a position, not just the rows a reader sees
-        data, _, hwm = _live_split_from(commits)
+        data, _, hwm = _split_files(commits, live)
         ranked = _ranked_batch(
-            _read_files_df(spark, out_dir, data),
+            _read_files_df(
+                spark, out_dir, data, _standing_schema(commits, live)
+            ),
             new_docs,
             n,
             pos_hwm=hwm,
@@ -803,24 +804,18 @@ def _split_files(
     return sorted(data), sorted(tomb), hwm
 
 
-def _live_split_from(
-    commits: list[tuple[str, dict]],
-) -> tuple[list[str], list[str], dict[int, int]]:
-    return _split_files(commits, set(_live_names_from(commits)))
-
-
 # --------------------- commit-carried schema (widen-only evolution)
 #
 # A month into a real pipeline the batch grows a column (a new
 # quality score) — the layout must absorb that without rewriting
 # standing files. The lakehouse pattern (Delta's mergeSchema writes,
 # public): every data-bearing commit records the (col, dtype) list
-# its files carry; appends may ADD columns (old files return null for
-# them under a mergeSchema read) but never drop or retype one — a
-# dropped column would silently fork the schema, and a retype breaks
-# the union read. Reads request parquet schema merging only when the
-# recorded schemas actually differ (footer-read cost only when
-# evolution happened).
+# its files carry; appends may ADD columns but never drop or retype
+# one — a dropped column would silently fork the schema, and a retype
+# breaks the union read. Reads take their schema from the log (the
+# union of the recorded schemas, see _read_files_df), so no parquet
+# footer is read to plan a scan and files predating an added column
+# return null for it.
 
 _CORE_SCHEMA: tuple[tuple[str, str], ...] = (
     ("shard", "int"),
@@ -875,19 +870,6 @@ def _standing_schema(
             else:
                 out[c] = t
     return out
-
-
-def _schemas_differ(
-    commits: list[tuple[str, dict]], names: set[str]
-) -> bool:
-    """True when the live data commits disagree on their column sets
-    — the trigger for a mergeSchema read (see _read_files_df)."""
-    seen = {
-        frozenset(c for c, _ in _commit_schema(man))
-        for name, man in commits
-        if name in names and _data_bearing(man)
-    }
-    return len(seen) > 1
 
 
 def _check_widen_only(
@@ -956,9 +938,8 @@ def _tombstone_ids_seq(
         F.col("_metadata.file_path"), r"(_tombstones/[^/]+/[^/]+)$", 1
     )
     return (
-        spark.read.parquet(
-            *[os.path.join(out_dir, f) for f in sorted(tomb)]
-        )
+        spark.read.schema("doc_id bigint")
+        .parquet(*[os.path.join(out_dir, f) for f in sorted(tomb)])
         .withColumn("_trel", rel)
         .join(F.broadcast(fmap), F.col("_trel") == F.col("trel"))
         .groupBy("doc_id")
@@ -996,8 +977,8 @@ def _masked_view(
     out_dir: str,
     data: dict[str, int],
     tomb: dict[str, int],
+    schema: dict[str, str],
     tomb_df: DataFrame | None = None,
-    merge_schema: bool = False,
 ) -> DataFrame:
     """The data files' rows minus SEQ-SCOPED tombstones: a tombstone
     at seq S masks a row iff the row's data commit has seq
@@ -1019,8 +1000,9 @@ def _masked_view(
     _TOMBSTONE_BROADCAST_MAX_BYTES (above it AQE picks the join —
     see the constant's comment); the anti-join condition is id
     equality AND del_seq > data_seq. The no-tombstone fast path is
-    the plain committed scan, unchanged."""
-    df = _read_files_df(spark, out_dir, sorted(data), merge_schema)
+    the plain committed scan, unchanged. ``schema`` is the layout's
+    standing schema (see _read_files_df)."""
+    df = _read_files_df(spark, out_dir, sorted(data), schema)
     if not tomb and tomb_df is None:
         return df
     cols = df.columns
@@ -1071,24 +1053,30 @@ def _read_files_df(
     spark: SparkSession,
     out_dir: str,
     files: list[str],
-    merge_schema: bool = False,
+    schema: dict[str, str],
 ) -> DataFrame:
-    """Scan exactly ``files`` (relative to ``out_dir``), keeping the
-    shard partition column via basePath. ``merge_schema`` unions the
-    files' parquet schemas (files predating an added column return
-    null for it) — requested only when the commits' RECORDED schemas
-    actually differ, because without the option the scan schema comes
-    from one sampled footer (non-deterministic under evolution) and
-    with it every footer is read (a real cost at 100 TB file
-    counts)."""
+    """Scan exactly ``files`` (relative to ``out_dir``) under
+    ``schema``, the col -> dtype map _standing_schema takes from the
+    log, keeping the shard partition column via basePath. The data
+    columns keep the order the writers lay them out in and the shard
+    column comes last, as an inferred read would order them. Because
+    the schema is given, planning the scan reads no parquet footer
+    (an inference job per read otherwise), and files predating a
+    widened column return null for it."""
     import os
 
     if not files:
         raise ValueError(f"commit log at {out_dir} references no files")
-    rd = spark.read.option("basePath", out_dir)
-    if merge_schema:
-        rd = rd.option("mergeSchema", "true")
-    return rd.parquet(*[os.path.join(out_dir, f) for f in files])
+    cols = [(c, t) for c, t in schema.items() if c != "shard"]
+    ddl = ", ".join(
+        "`{}` {}".format(c.replace("`", "``"), t)
+        for c, t in [*cols, ("shard", schema["shard"])]
+    )
+    return (
+        spark.read.schema(ddl)
+        .option("basePath", out_dir)
+        .parquet(*[os.path.join(out_dir, f) for f in files])
+    )
 
 
 def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1105,8 +1093,7 @@ def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
     live = set(_live_names_from(commits))
     data, tomb, _ = _seq_split(commits, live)
     return _masked_view(
-        spark, out_dir, data, tomb,
-        merge_schema=_schemas_differ(commits, live),
+        spark, out_dir, data, tomb, _standing_schema(commits, live)
     )
 
 
@@ -1246,13 +1233,12 @@ def read_committed_pruned(
 
     kept = {f: s for f, s in data.items() if _keep(f)}
     if not kept:
-        # every file pruned: scan one file for the schema; the
-        # residual predicate empties it
+        # every file pruned: a scan needs a path, so keep one file;
+        # the residual predicate empties it
         first = sorted(data)[0]
         kept = {first: data[first]}
     df = _masked_view(
-        spark, out_dir, kept, tomb,
-        merge_schema=_schemas_differ(commits, live),
+        spark, out_dir, kept, tomb, _standing_schema(commits, live)
     )
     if doc_id_min is not None:
         df = df.filter(F.col("doc_id") >= doc_id_min)
@@ -1363,8 +1349,7 @@ def read_snapshot(
     live = _window_live_names(commits, as_of_seq)
     data, tomb, _ = _seq_split(commits, live)
     return _masked_view(
-        spark, out_dir, data, tomb,
-        merge_schema=_schemas_differ(commits, live),
+        spark, out_dir, data, tomb, _standing_schema(commits, live)
     )
 
 
@@ -1557,14 +1542,14 @@ def merge_docs_tx(
         # re-fence each attempt: a racing append may have widened the
         # layout since the batch was staged — then this batch now
         # drops a standing column and must fail loudly, not fork
-        extras = _check_widen_only(
-            batch, commits, set(_live_names_from(commits)),
-            "merge_docs_tx",
-        )
-        data, _, hwm = _live_split_from(commits)
+        live = set(_live_names_from(commits))
+        extras = _check_widen_only(batch, commits, live, "merge_docs_tx")
+        data, _, hwm = _split_files(commits, live)
         ranked = _ranked_batch(
-            _read_files_df(spark, out_dir, data), batch, n,
-            pos_hwm=hwm, extras=extras,
+            _read_files_df(
+                spark, out_dir, data, _standing_schema(commits, live)
+            ),
+            batch, n, pos_hwm=hwm, extras=extras,
         )
         new_files = _stage_write(ranked, out_dir)
         try:
@@ -1833,11 +1818,9 @@ def compact_shards(
             raise ValueError(f"nothing committed to compact at {out_dir}")
         # compaction rewrites the UNION schema (standing extras
         # included, old rows null-filled) and records it — after one
-        # compaction the layout's files agree again and reads drop
-        # back to the plain (no-mergeSchema) scan
+        # compaction the layout's files agree again
         sch = _standing_schema(commits, set(live_before))
         cols = list(sch)
-        merge = _schemas_differ(commits, set(live_before))
         # the position high-water mark is taken over the DATA view
         # (soft-deleted rows included) BEFORE the tombstones are
         # materialized away, and carried in the commit so appends
@@ -1845,7 +1828,7 @@ def compact_shards(
         # n_shards-bounded driver read
         new_hwm = dict(hwm)
         shard_max = (
-            _read_files_df(spark, out_dir, sorted(data))
+            _read_files_df(spark, out_dir, sorted(data), sch)
             .groupBy("shard")
             .agg(F.max("pos").alias("mx"))
             .collect()  # driver-bounded(n_shards): commit metadata
@@ -1858,9 +1841,7 @@ def compact_shards(
         # committed view is invariant under compaction timing); any
         # delete landing after this snapshot conflicts (see
         # _CONFLICTS) and forces a recompute
-        src = _masked_view(
-            spark, out_dir, data, tomb, merge_schema=merge
-        ).select(*cols)
+        src = _masked_view(spark, out_dir, data, tomb, sch).select(*cols)
         new_files = _stage_write(
             src.repartition(n_shards, "shard")
             .sortWithinPartitions("shard", "pos"),
@@ -1955,7 +1936,6 @@ def reshard_double(
         # like compaction: rewrite (and record) the union schema
         sch = _standing_schema(commits, set(live_before))
         cols = list(sch)
-        merge = _schemas_differ(commits, set(live_before))
         # reshard materializes the seq-scoped deletes (pos is
         # re-minted 1..n per new shard anyway — the permutation is
         # redefined, so no high-water mark survives); the tombstone
@@ -1971,8 +1951,7 @@ def reshard_double(
 
         def _view(data_subset: dict[str, int]) -> DataFrame:
             return _masked_view(
-                spark, out_dir, data_subset, tomb, tomb_df=tomb_ids,
-                merge_schema=merge,
+                spark, out_dir, data_subset, tomb, sch, tomb_df=tomb_ids
             ).select(*cols)
 
         new_files: list[str] = []
@@ -2602,10 +2581,9 @@ def q_export_schema_evolution(
     score beside every doc): a core-schema base export, then a batch
     carrying a NEW nullable ``quality`` column lands through
     append_shards_tx; the commit RECORDS its (col, dtype) schema, the
-    committed read unions the file schemas (old rows read back null —
-    triggered only while recorded schemas actually differ), a
-    compaction MATERIALIZES the union schema (after it every live
-    file agrees and reads drop back to the plain scan), and a batch
+    committed read scans under the union of the recorded schemas (old
+    rows read back null), a compaction MATERIALIZES the union schema
+    (after it every live file carries it), and a batch
     that DROPS the column is rejected loudly (a silent drop forks the
     schema). Asserted inside: pre-widen old rows are null, widened
     values survive the compaction bit-exactly, and the drop fence
@@ -2827,8 +2805,7 @@ def lookup_docs(
         first = sorted(data)[0]
         kept = {first: data[first]}
     df = _masked_view(
-        spark, out_dir, kept, tomb,
-        merge_schema=_schemas_differ(commits, live),
+        spark, out_dir, kept, tomb, _standing_schema(commits, live)
     )
     return df.filter(F.col("doc_id").isin(ids))
 
